@@ -50,10 +50,11 @@ def build_catalog(events: DataFrame, suffix: str = ".zip") -> DataFrame:
     # backup-family key, so the py4j saving is paid back once per
     # catalog-consuming query per run (guide §1.2 step 2 /
     # OPTIMIZATION_r16 §3's selectExpr lever).
-    # suffix is embedded in a parsed expression string now — reject
-    # anything that could break out of the literal (internal callers
-    # only ever pass '.zip'-style names; fail loudly on surprises).
-    assert "'" not in suffix and "\\" not in suffix, suffix
+    # suffix is embedded in a parsed expression string — reject anything
+    # that could break out of the literal. A raise, not an assert, so
+    # the check survives `python -O`.
+    if "'" in suffix or "\\" in suffix:
+        raise ValueError(f"catalog suffix may not contain ' or \\: {suffix!r}")
     gens = ", ".join(f"'{g}'" for g in GENERATIONS)
     return (
         events.selectExpr(

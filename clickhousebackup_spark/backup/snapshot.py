@@ -19,7 +19,8 @@ import os
 import shutil
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 @dataclass(frozen=True)
@@ -39,33 +40,52 @@ def snapshot_table(
     period_key: str,
     partition_by: list[str] | None = None,
 ) -> SnapshotResult:
-    """Write one immutable snapshot with staged-atomic publish."""
+    """Write one immutable snapshot with staged-atomic publish.
+
+    Job budget: at most 3 Spark jobs, all in ``write_verified``.
+    """
     final = os.path.join(base_dir, db, f"{table}-{period_key}")
     staging = final + "-new"  # the `*-new` staging suffix, backup.sh:68-70
-    if os.path.exists(staging):
-        shutil.rmtree(staging)
-    expected = df.count()
-    writer = df.write.mode("error")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
-
-    # A11 verify: reread before publishing and compare against the
-    # source row count; a missing/truncated artifact (e.g. a lost part
-    # file that still parses) aborts the publish — the reference's
-    # `[ ! -f … ] && exit 1` strengthened from existence to cardinality.
-    n = df.sparkSession.read.parquet(staging).count()
-    if n != expected:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise RuntimeError(
-            f"snapshot verify failed for {db}.{table}-{period_key}: "
-            f"staged artifact has {n} rows, source has {expected}"
-        )
-
+    n = write_verified(
+        df, staging, f"snapshot {db}.{table}-{period_key}", partition_by
+    )
     if os.path.exists(final):  # backup.sh:80: replace existing period artifact
         shutil.rmtree(final)
     os.rename(staging, final)
     return SnapshotResult(db=db, table=table, period_key=period_key, path=final, n_rows=n)
+
+
+def write_verified(
+    df: DataFrame, path: str, what: str, partition_by: list[str] | None = None
+) -> int:
+    """Write ``df`` as parquet to a fresh ``path`` and verify it before
+    anything publishes it (A11): the reread must hold as many rows as
+    the write did, or ``path`` is removed and ``RuntimeError`` raised.
+    This is the reference's `[ ! -f … ] && exit 1` strengthened from
+    existence to cardinality; it catches e.g. a lost part file.
+
+    Returns the row count. Job budget: at most 3 Spark jobs — the write
+    (1), which also counts its rows through an ``Observation`` instead
+    of a separate ``df.count()`` scan, and the reread's count (2: scan
+    stage + final agg). The reread is given ``df.schema``, so no parquet
+    schema-inference job runs.
+    """
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    written = Observation()
+    writer = df.observe(written, F.count(F.lit(1)).alias("n")).write.mode("error")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
+    expected = written.get["n"]
+    n = df.sparkSession.read.schema(df.schema).parquet(path).count()
+    if n != expected:
+        shutil.rmtree(path, ignore_errors=True)
+        raise RuntimeError(
+            f"{what} verify failed: staged artifact has {n} rows, "
+            f"{expected} were written"
+        )
+    return n
 
 
 def read_snapshot(spark: SparkSession, path: str) -> DataFrame:

@@ -22,6 +22,8 @@ retention prune → post hooks, with the error trap firing error hooks.
 from __future__ import annotations
 
 import os
+import shutil
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -40,7 +42,11 @@ from clickhousebackup_spark.backup.retention import (
     prune_delete_set,
     retention_plan,
 )
-from clickhousebackup_spark.backup.snapshot import SnapshotResult, snapshot_table
+from clickhousebackup_spark.backup.snapshot import (
+    SnapshotResult,
+    snapshot_table,
+    write_verified,
+)
 from clickhousebackup_spark.tables import load_table
 
 CATALOG_SCHEMA = (
@@ -82,51 +88,7 @@ class BackupEngine:
         """One scheduled run: for each configured db (env.sh:24 split),
         snapshot its tables with the `last` period key and register all
         four generation rows in the catalog (backup.sh:24-97)."""
-        import datetime as dt
-
-        now = now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-
-        def job() -> list[SnapshotResult]:
-            results: list[SnapshotResult] = []
-            for db in self.config.db_list:  # backup.sh:24
-                for tname, df in tables_by_db.get(db, {}).items():
-                    key = now.strftime("%Y%m%d-%H%M%S")  # backup.sh:26
-                    res = snapshot_table(
-                        df, self.config.backup_dir, db, tname, key
-                    )
-                    results.append(res)
-                    self._register(db, tname, res, now)
-            self.materialize_latest()  # backup.sh:99-115, per run
-            return results
-
-        return self.hooks.run_job(job)  # pre/post/error per backup.sh
-
-    def _register(self, db: str, table: str, res: SnapshotResult, now) -> None:
-        rows = []
-        for gen in GENERATIONS:
-            rows.append(
-                (db, table, gen, "", now, self._snapshot_seq, res.path, "", res.n_rows)
-            )
-            self._snapshot_seq += 1
-        new = self.spark.createDataFrame(rows, CATALOG_SCHEMA).withColumn(
-            "period_key", period_key_expr("snapshot_ts", "generation")
-        ).withColumn(
-            "content_hash",
-            F.md5(F.concat_ws("|", "db", "generation", "period_key", "path")),
-        )
-        self._append_catalog(
-            new.select(
-                "db",
-                "table_name",
-                "generation",
-                "period_key",
-                "snapshot_ts",
-                "snapshot_id",
-                "path",
-                "content_hash",
-                "size_bytes",
-            )
-        )
+        return self._run(tables_by_db, now, lambda db, table, df: df)
 
     def run_incremental(
         self, tables_by_db: dict[str, dict[str, DataFrame]], now=None
@@ -150,9 +112,6 @@ class BackupEngine:
         are captured, so a table holding k copies of a row round-trips
         all k (a plain anti-join would silently drop every duplicate).
         """
-        import datetime as dt
-
-        now = now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
 
         def row_hash(df: DataFrame, cols: list[str]):
             # Columns absent in an older snapshot hash as nulls, so the
@@ -165,47 +124,92 @@ class BackupEngine:
                 F.to_json(F.struct(*fields), {"ignoreNullFields": "false"})
             )
 
+        def new_rows(db: str, tname: str, df: DataFrame) -> DataFrame:
+            try:
+                # diff against the COMPOSED state (base + all deltas),
+                # not just the newest snapshot
+                prev = self.restore_incremental(db, tname)
+            except FileNotFoundError:
+                return df  # first run = full snapshot
+            cols = list(df.columns)
+            prev_counts = (
+                prev.groupBy(row_hash(prev, cols).alias("_h"))
+                .agg(F.count(F.lit(1)).alias("_n_prev"))
+            )
+            # occurrence index among identical rows: any order works —
+            # rows within a hash are byte-identical, so which copies
+            # survive the filter is unobservable.
+            w_occ = Window.partitionBy("_h").orderBy(F.lit(1))
+            return (
+                df.withColumn("_h", row_hash(df, cols))
+                .withColumn("_occ", F.row_number().over(w_occ))
+                .join(prev_counts, on="_h", how="left")
+                .filter(
+                    F.col("_occ") > F.coalesce(F.col("_n_prev"), F.lit(0))
+                )
+                .drop("_h", "_occ", "_n_prev")
+            )
+
+        return self._run(tables_by_db, now, new_rows)
+
+    def _run(
+        self,
+        tables_by_db: dict[str, dict[str, DataFrame]],
+        now,
+        rows_to_write: Callable[[str, str, DataFrame], DataFrame],
+    ) -> list[SnapshotResult]:
+        """The snapshot loop shared by full and incremental runs, inside
+        the hook lifecycle. ``rows_to_write(db, table, df)`` picks what
+        each snapshot writes.
+
+        Every published snapshot is registered by ONE catalog append
+        after the loop. The append sits in a ``finally``: a table that
+        fails mid-run still leaves the snapshots published before it
+        registered (and the error hooks fire once, from ``run_job``).
+        """
+        import datetime as dt
+
+        now = now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+        key = now.strftime("%Y%m%d-%H%M%S")  # backup.sh:26
+
         def job() -> list[SnapshotResult]:
             results: list[SnapshotResult] = []
-            for db in self.config.db_list:
-                for tname, df in tables_by_db.get(db, {}).items():
-                    new_rows = df
-                    try:
-                        # diff against the COMPOSED state (base + all
-                        # deltas), not just the newest snapshot
-                        prev = self.restore_incremental(db, tname)
-                        cols = list(df.columns)
-                        prev_counts = (
-                            prev.groupBy(row_hash(prev, cols).alias("_h"))
-                            .agg(F.count(F.lit(1)).alias("_n_prev"))
-                        )
-                        # occurrence index among identical rows: any
-                        # order works — rows within a hash are
-                        # byte-identical, so which copies survive the
-                        # filter is unobservable.
-                        w_occ = Window.partitionBy("_h").orderBy(F.lit(1))
-                        new_rows = (
-                            df.withColumn("_h", row_hash(df, cols))
-                            .withColumn("_occ", F.row_number().over(w_occ))
-                            .join(prev_counts, on="_h", how="left")
-                            .filter(
-                                F.col("_occ")
-                                > F.coalesce(F.col("_n_prev"), F.lit(0))
+            try:
+                for db in self.config.db_list:  # backup.sh:24
+                    for tname, df in tables_by_db.get(db, {}).items():
+                        results.append(
+                            snapshot_table(
+                                rows_to_write(db, tname, df),
+                                self.config.backup_dir, db, tname, key,
                             )
-                            .drop("_h", "_occ", "_n_prev")
                         )
-                    except FileNotFoundError:
-                        pass  # first run = full snapshot
-                    key = now.strftime("%Y%m%d-%H%M%S")
-                    res = snapshot_table(
-                        new_rows, self.config.backup_dir, db, tname, key
-                    )
-                    results.append(res)
-                    self._register(db, tname, res, now)
-            self.materialize_latest()
+            finally:
+                self._register(results, now)
+            self.materialize_latest()  # backup.sh:99-115, per run
             return results
 
-        return self.hooks.run_job(job)
+        return self.hooks.run_job(job)  # pre/post/error per backup.sh
+
+    def _register(self, results: list[SnapshotResult], now) -> None:
+        """Append all four generation rows of every snapshot in
+        ``results`` to the catalog in one write (none when empty)."""
+        if not results:
+            return
+        rows = []
+        for res in results:
+            for gen in GENERATIONS:
+                rows.append(
+                    (res.db, res.table, gen, "", now, self._snapshot_seq,
+                     res.path, "", res.n_rows)
+                )
+                self._snapshot_seq += 1
+        new = self.spark.createDataFrame(rows, CATALOG_SCHEMA).withColumn(
+            "period_key", period_key_expr("snapshot_ts", "generation")
+        ).withColumn(
+            "content_hash",
+            F.md5(F.concat_ws("|", "db", "generation", "period_key", "path")),
+        )
+        self._append_catalog(new)
 
     def restore_incremental(
         self, db: str, table: str, until_period_key: str | None = None
@@ -309,9 +313,13 @@ class BackupEngine:
         )
 
     def catalog(self) -> DataFrame:
+        """The catalog as a lazy DataFrame; launches no Spark job. The
+        read is given ``CATALOG_SCHEMA``, so parquet schema inference
+        (one job per read) never runs; the ``generation`` partition
+        column comes last, as in an inferred read."""
         if not os.path.exists(self.catalog_path):
             return self.spark.createDataFrame([], CATALOG_SCHEMA)
-        return self.spark.read.parquet(self.catalog_path)
+        return self.spark.read.schema(CATALOG_SCHEMA).parquet(self.catalog_path)
 
     # -- retention (backup.sh:90-122) --
 
@@ -361,71 +369,68 @@ class BackupEngine:
 
         With ``apply=False`` (default) only returns the delete set,
         mirroring how backup.sh separates listing (``find``) from
-        action (``rm``). With ``apply=True`` it also removes the
-        snapshot dirs and rewrites the catalog without them — the
-        `-exec rm -rvf` side. One path is registered under all four
+        action (``rm``). With ``apply=True`` it also rewrites the
+        catalog without the deleted rows and then removes the snapshot
+        dirs — the `-exec rm -rvf` side. Catalog first, files second: a
+        crash in between leaves orphan dirs, never catalog rows that
+        point at removed paths. One path is registered under all four
         generations (backup.sh's hardlink fan-out), so a dir is only
         removed when NO kept generation row still references it.
 
-        The collects here are catalog-scale (one row per snapshot
-        artifact), never data-scale.
+        With ``apply=True`` the plan is materialized once
+        (``localCheckpoint``) and collected once; the delete set, the
+        kept paths and the dirs to remove all derive from that one
+        collect, and only rows the plan classified can be deleted. Job
+        budget: the checkpoint (the retention plan's own jobs), one
+        collect, and the catalog rewrite's write and verify count — 16
+        jobs at most on the default plan. The collect is catalog-scale
+        (one row per snapshot artifact), never data-scale.
         """
         plan = plan if plan is not None else self.retention_plan()
-        delete_df = prune_delete_set(self.generation_state(), plan)
         if not apply:
-            return delete_df
+            return prune_delete_set(self.generation_state(), plan)
         # Materialize before mutating storage: the lazy plan reads the
         # catalog files the rewrite below replaces.
-        delete_df = delete_df.localCheckpoint(eager=True)
-        kept_paths = {
-            r["path"]
-            for r in plan.filter(F.col("keep") == 1)
-            .select("path")
-            .distinct()
-            .collect()
-        }
-        doomed = {
-            r["path"]
-            for r in delete_df.select("path").distinct().collect()
-            if r["path"] not in kept_paths
-        }
+        plan = plan.localCheckpoint(eager=True)
+        delete_df = prune_delete_set(plan.drop("age_minutes", "keep"), plan)
+        rows = plan.select("db", "generation", "path", "snapshot_id", "keep").collect()
+        kept = {(r["db"], r["generation"], r["path"]) for r in rows if r["keep"] == 1}
+        deleted = [r for r in rows if (r["db"], r["generation"], r["path"]) not in kept]
+        if not deleted:
+            return delete_df
+        doomed = {r["path"] for r in deleted} - {path for _, _, path in kept}
         backup_root = os.path.realpath(self.config.backup_dir)
-        for path in sorted(doomed):
-            real = os.path.realpath(path)
+        for path in doomed:
             # refuse to rm anything that escaped the backup volume
+            real = os.path.realpath(path)
             if os.path.commonpath([backup_root, real]) != backup_root:
                 raise ValueError(f"prune path outside backup_dir: {path}")
+        self._rewrite_catalog_excluding([r["snapshot_id"] for r in deleted], doomed)
+        for path in sorted(doomed):
+            real = os.path.realpath(path)
             if os.path.isdir(real):
-                import shutil
-
                 shutil.rmtree(real)
             elif os.path.exists(real):
                 os.remove(real)
-        self._rewrite_catalog_excluding(delete_df, doomed)
         return delete_df
 
     def _rewrite_catalog_excluding(
-        self, delete_df: DataFrame, doomed_paths: set[str]
+        self, snapshot_ids: list[int], doomed_paths: set[str]
     ) -> None:
         """Staged-atomic catalog rewrite dropping the deleted rows (by
         snapshot_id — the per-generation "hardlink" entries, mirroring
-        the per-generation-dir rm) plus any row whose backing path was
-        removed (superseded rows that would otherwise dangle)."""
-        import shutil
+        the per-generation-dir rm) plus any row whose backing path is
+        being removed (superseded rows that would otherwise dangle).
 
-        survivors = self.catalog().join(
-            delete_df.select("snapshot_id"), on="snapshot_id", how="left_anti"
-        ).select(*self.catalog().columns)
+        Verified before the swap (``write_verified``): the staged
+        catalog's reread row count must equal the count observed on the
+        survivors write, or the staging dir is removed, the old catalog
+        is left in place and ``RuntimeError`` is raised."""
+        survivors = self.catalog().filter(~F.col("snapshot_id").isin(snapshot_ids))
         if doomed_paths:
-            survivors = survivors.filter(
-                ~F.col("path").isin(list(doomed_paths))
-            )
+            survivors = survivors.filter(~F.col("path").isin(sorted(doomed_paths)))
         staging = self.catalog_path + "-new"
-        if os.path.exists(staging):
-            shutil.rmtree(staging)
-        survivors.write.partitionBy("generation").parquet(staging)
-        # Read fully before swapping — survivors lazily reads the old dir.
-        self.spark.read.parquet(staging).count()
+        write_verified(survivors, staging, "catalog rewrite", ["generation"])
         shutil.rmtree(self.catalog_path)
         os.rename(staging, self.catalog_path)
 
@@ -444,8 +449,6 @@ class BackupEngine:
         Returns the pointer paths written, so ``restore_latest`` can
         resolve "latest" from the filesystem alone.
         """
-        import shutil
-
         if self.config.latest_type == "none":
             return []
         written: list[str] = []

@@ -54,3 +54,22 @@ def write_events_fixture(spark, tmp_path, rows) -> str:
         "overwrite"
     ).parquet(f"{d}/events.parquet")
     return d
+
+
+def drop_a_part_file_after_write(monkeypatch, path_suffix: str) -> None:
+    """Make every ``DataFrameWriter.parquet`` call whose target path ends
+    with ``path_suffix`` lose one part file right after the write — the
+    torn artifact a publish-time verify must catch."""
+    import glob
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    write = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        write(self, path, *args, **kwargs)
+        if path.endswith(path_suffix):
+            parts = glob.glob(os.path.join(path, "**", "part-*"), recursive=True)
+            os.remove(sorted(parts)[0])
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)

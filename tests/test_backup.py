@@ -29,6 +29,8 @@ from clickhousebackup_spark.backup.retention import (
 from clickhousebackup_spark.backup.snapshot import snapshot_table
 from clickhousebackup_spark.tables import load_table
 
+from .conftest import drop_a_part_file_after_write
+
 # ---------- config (A1-A4) ----------
 
 
@@ -178,6 +180,35 @@ def test_snapshot_staged_atomic_publish(spark, sf_dir):
     # immutable rerun with same period replaces, not appends
     res2 = snapshot_table(df, base, "db0", "region", "20240101")
     assert spark.read.parquet(res2.path).count() == df.count()
+
+
+def test_snapshot_verify_mismatch_aborts_publish(spark, sf_dir, monkeypatch):
+    """A staged artifact that lost a part file fails the A11 verify: the
+    publish aborts, staging is removed, and the artifact already
+    published for the same period is left untouched."""
+    base = tempfile.mkdtemp(prefix="cbs_snapverify_")
+    df = load_table(spark, sf_dir, "orders").repartition(2)
+    good = snapshot_table(df, base, "db0", "orders", "20240101")
+    files_before = sorted(os.listdir(good.path))
+
+    drop_a_part_file_after_write(monkeypatch, "-new")
+    with pytest.raises(RuntimeError, match="snapshot db0.orders-20240101 verify failed"):
+        snapshot_table(df, base, "db0", "orders", "20240101")
+    assert not os.path.exists(good.path + "-new")
+    assert sorted(os.listdir(good.path)) == files_before
+    assert spark.read.parquet(good.path).count() == good.n_rows
+
+
+def test_build_catalog_rejects_quoting_suffix(spark, sf_dir):
+    """The suffix is spliced into parsed SQL text, so a quote or
+    backslash raises ValueError (an assert would vanish under -O)."""
+    from clickhousebackup_spark.backup.catalog import build_catalog
+
+    events = load_table(spark, sf_dir, "events")
+    for bad in (".zip'", "x\\"):
+        with pytest.raises(ValueError, match="suffix"):
+            build_catalog(events, suffix=bad)
+    assert build_catalog(events, suffix=".tar").count() == events.count()
 
 
 # ---------- retention laws on randomized catalogs (hypothesis) ----------

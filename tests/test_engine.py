@@ -6,14 +6,20 @@ retention → prune — against real fixture tables.
 from __future__ import annotations
 
 import datetime as dt
+import os
+import shutil
 import tempfile
+import uuid
 
 import pytest
 
 from clickhousebackup_spark.backup.config import BackupConfig
+from clickhousebackup_spark.backup.snapshot import snapshot_table
 from clickhousebackup_spark.engine import BackupEngine
 from clickhousebackup_spark.sources import readers
 from clickhousebackup_spark.tables import load_table
+
+from .conftest import drop_a_part_file_after_write
 
 
 @pytest.fixture()
@@ -370,3 +376,138 @@ def test_restore_schema_evolution_falls_back_to_union(spark, engine):
     assert rows == sorted(
         [(1, "x", None), (2, "y", None), (3, "z", "new")], key=repr
     )
+
+
+def _count_jobs(spark, fn):
+    """Run ``fn`` in its own job group; (its result, the Spark jobs it
+    launched)."""
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _two_runs(engine, tables):
+    """Back ``tables`` up 13 months apart, so prune expires the old run."""
+    engine.run_backup(tables, now=dt.datetime(2023, 1, 1))
+    engine.run_backup(tables, now=dt.datetime(2024, 2, 1))
+
+
+def test_backup_cycle_job_budgets(spark, sf_dir, engine, monkeypatch):
+    """Pinned Spark-job budgets of the backup path: a schema-known
+    catalog read launches none, a snapshot at most 3 (write + verify
+    count), a 3-table run appends the catalog once, prune(apply=True)
+    at most 16."""
+    appends = []
+    append = engine._append_catalog
+    monkeypatch.setattr(
+        engine, "_append_catalog", lambda df: (appends.append(df), append(df))
+    )
+    tables = {
+        "db0": {
+            "orders": load_table(spark, sf_dir, "orders"),
+            "region": load_table(spark, sf_dir, "region"),
+        },
+        "db1": {"nation": load_table(spark, sf_dir, "nation")},
+    }
+    engine.run_backup(tables, now=dt.datetime(2023, 1, 1))
+    assert len(appends) == 1  # one per run, not one per table
+    engine.run_backup(tables, now=dt.datetime(2024, 2, 1))
+
+    cat, n_jobs = _count_jobs(spark, engine.catalog)
+    assert n_jobs == 0
+    assert cat.columns[-1] == "generation"  # partition column last
+    _, n_jobs = _count_jobs(
+        spark,
+        lambda: snapshot_table(
+            tables["db0"]["orders"], engine.config.backup_dir, "db9", "orders",
+            "20240101-000000",
+        ),
+    )
+    assert n_jobs <= 3
+    n_delete = engine.prune().count()
+    assert n_delete > 0
+    delete, n_jobs = _count_jobs(spark, lambda: engine.prune(apply=True))
+    assert n_jobs <= 16
+    assert delete.count() == n_delete
+
+
+def test_run_backup_partial_failure_registers_published(spark, sf_dir, engine):
+    """A table whose write fails mid-run: the table published before it
+    is still registered (the batched append runs in a finally) and the
+    error hook fires exactly once."""
+    calls = []
+    engine.add_hook(calls.append)
+    orders = load_table(spark, sf_dir, "orders")
+    broken = spark.range(3).selectExpr("raise_error('write failed') AS x")
+    with pytest.raises(Exception, match="write failed"):
+        engine.run_backup(
+            {"db0": {"orders": orders, "broken": broken}},
+            now=dt.datetime(2024, 2, 1),
+        )
+    assert calls == ["pre-backup", "error"]
+    rows = engine.catalog().collect()
+    assert len(rows) == 4
+    assert {r["generation"] for r in rows} == {"last", "daily", "weekly", "monthly"}
+    assert {r["table_name"] for r in rows} == {"orders"}
+    assert os.path.isdir(rows[0]["path"])
+    assert engine.restore("db0", "orders").count() == orders.count()
+
+
+def test_prune_crash_between_catalog_and_rm_leaves_no_dangling_rows(
+    spark, sf_dir, engine, monkeypatch
+):
+    """Prune rewrites the catalog before it removes dirs: a crash after
+    the first rmtree leaves orphan dirs, never catalog rows pointing at
+    removed paths."""
+    tables = {
+        "db0": {"orders": load_table(spark, sf_dir, "orders").limit(10)},
+        "db1": {"region": load_table(spark, sf_dir, "region")},
+    }
+    _two_runs(engine, tables)
+    backup_root = os.path.realpath(engine.config.backup_dir)
+    rmtree = shutil.rmtree
+    removed = []
+
+    def crash_on_second_snapshot_dir(path, *args, **kwargs):
+        # snapshot dirs are <backup_dir>/<db>/<table>-<key>
+        if os.path.dirname(os.path.dirname(path)) == backup_root:
+            if removed:
+                raise OSError("crash mid-prune")
+            removed.append(path)
+        return rmtree(path, *args, **kwargs)
+
+    monkeypatch.setattr(shutil, "rmtree", crash_on_second_snapshot_dir)
+    with pytest.raises(OSError, match="crash mid-prune"):
+        engine.prune(apply=True)
+    assert len(removed) == 1 and not os.path.exists(removed[0])
+    paths = {r["path"] for r in engine.catalog().select("path").collect()}
+    assert len(paths) == 2 and removed[0] not in paths
+    assert all(os.path.isdir(p) for p in paths)
+    assert engine.restore("db0", "orders").count() == 10
+    assert engine.restore("db1", "region").count() == 5
+
+
+def test_prune_catalog_rewrite_verify_aborts_swap(spark, sf_dir, engine, monkeypatch):
+    """A staged catalog that lost a part file fails the rewrite's count
+    check: the swap is aborted, the old catalog and every snapshot dir
+    stay, and the staging dir is removed."""
+    tables = {"db0": {"orders": load_table(spark, sf_dir, "orders").limit(10)}}
+    _two_runs(engine, tables)
+    before = sorted(
+        (r["snapshot_id"], r["path"]) for r in engine.catalog().collect()
+    )
+
+    drop_a_part_file_after_write(monkeypatch, "_catalog-new")
+    with pytest.raises(RuntimeError, match="catalog rewrite verify failed"):
+        engine.prune(apply=True)
+    assert not os.path.exists(engine.catalog_path + "-new")
+    after = sorted(
+        (r["snapshot_id"], r["path"]) for r in engine.catalog().collect()
+    )
+    assert after == before
+    assert all(os.path.isdir(p) for _, p in before)
